@@ -17,6 +17,17 @@ so an independent reader can resolve the current schema (with stable
 field ids), partition specs, the snapshot chain, and the exact data-file
 list with record counts/sizes — without this engine's code.
 
+The export is read-only over table state: it reads `_meta.json` and
+`_snapshots.json` and writes only under `metadata/` (and the compiled
+equality-delete dirs below). Table._commit calls it once per commit,
+after the refs move, under the commit lock. The next version N is the
+one in `version-hint.text` plus one; `vN.metadata.json` is created
+exclusively, so an existing one (left by a crash before the hint moved)
+is skipped, never overwritten. Sequence numbers are snapshot ids — the
+numbering the engine itself uses for data sequences (`dir_seqs`) and
+equality deletes — so they only grow, and `last-sequence-number` never
+drops when expire_snapshots shortens the snapshot list.
+
 Both metadata levels are written in the REAL binary layout: manifest
 lists and manifests are Avro object-container files (deflate codec,
 field-id annotated schemas) produced by the engine's pure-stdlib Avro
@@ -27,10 +38,16 @@ inlined) is kept alongside as a human-debuggable sibling; the metadata
 document's `manifest-list` field points at the Avro file, as the spec
 requires (reference README.md:169-175 shows `snap-….avro`).
 
-Cost model: export is driver-side JSON/Avro of O(files) entries built
-from footer stats CACHED at write time (per-dir .stats.json sidecars) — no
-data reads, no Spark job, same order of work as Iceberg's own commit
-path. Per-dir manifest Avro files are immutable and written once.
+Cost model: the export builds JSON/Avro in the calling process from
+footer stats CACHED at write time (per-dir .stats.json sidecars) — no
+data reads and, unless an equality delete needs compiling, no Spark job.
+Per-dir manifest Avro files are immutable and written once. But the
+export is not incremental: every commit rewrites EVERY retained snapshot's manifest
+list — its Avro file and its JSON mirror — plus a new vN.metadata.json,
+so a commit's metadata writes grow with the snapshot count until
+expire_snapshots shortens the list: six successive upserts on one table
+make 12, 14, ..., 22 atomic file writes each, two more per retained
+snapshot.
 """
 
 from __future__ import annotations
@@ -612,7 +629,7 @@ def _write_manifest_avro(
     return path
 
 
-def _compile_eq_deletes(table: Table, meta: dict, snap: dict) -> str | None:
+def _compile_eq_deletes(table: Table, meta: dict, snap: dict, seqs: dict[str, int]) -> str | None:
     """Compile a snapshot's live EQUALITY deletes into a POSITIONAL
     delete parquet dir (Iceberg v2 `(file_path, pos)` schema) so the
     export carries only content=0/1 manifests any v2 reader understands —
@@ -631,11 +648,11 @@ def _compile_eq_deletes(table: Table, meta: dict, snap: dict) -> str | None:
     the every-commit export path reuses it for free (appends after the
     delete change neither term: new dirs carry higher sequences). The
     job itself is the same broadcast semi-join shape as the engine's own
-    eq-delete read path: O(data scanned once), delete keys broadcast."""
+    eq-delete read path: O(data scanned once), delete keys broadcast.
+    ``seqs`` is the table's dir → data sequence map (Table._dir_seqs)."""
     eq_recs = snap.get("eq_deletes", [])
     if not eq_recs:
         return None
-    seqs = table._dir_seqs()
     max_seq = max(int(r["seq"]) for r in eq_recs)
     affected = sorted(d for d in snap["manifest"] if int(seqs.get(d, 1)) < max_seq)
     if not affected:
@@ -712,13 +729,16 @@ def _compile_eq_deletes(table: Table, meta: dict, snap: dict) -> str | None:
 
 def write_iceberg_metadata(table: Table) -> str:
     """Export the table's current state as Iceberg-v2-shaped metadata.
-    Returns the metadata file path. Called after every commit; safe to
-    call standalone. Equality deletes are compiled into positional
-    delete files at export time (_compile_eq_deletes), so external
-    readers see exactly the engine's own row set."""
+    Returns the metadata file path. Called once by every commit and
+    metadata change, under the commit lock; safe to call standalone.
+    Reads table state and writes only under `metadata/` (plus compiled
+    eqpos dirs). Equality deletes are compiled into positional delete
+    files at export time (_compile_eq_deletes), so external readers see
+    exactly the engine's own row set."""
     meta = table._meta()
     snaps = table._snaps()
     mains = [s for s in snaps if not s.get("branch")]
+    seqs = table._dir_seqs(meta, snaps)
     ids = meta.get("column_ids", {})
     mdir = os.path.join(table.path, "metadata")
     fsio.makedirs(mdir, exist_ok=True)
@@ -742,19 +762,21 @@ def write_iceberg_metadata(table: Table) -> str:
     # delete dirs, one per distinct (eq set, affected dirs) fingerprint
     eqpos: dict[int, str] = {}
     for s in snaps:
-        d = _compile_eq_deletes(table, meta, s)
+        d = _compile_eq_deletes(table, meta, s, seqs)
         if d:
             eqpos[s["snapshot_id"]] = d
-    # a dir's adding snapshot = its first appearance in the chain (drives
-    # the manifest's added_snapshot_id/sequence_number and the list's
-    # added-vs-existing counts)
-    added_in: dict[str, tuple[int, int]] = {}
-    for seq, s in enumerate(snaps, start=1):
+    # a dir's adding snapshot (drives the manifest's added_snapshot_id and
+    # sequence_number and the list's added-vs-existing counts): its data
+    # sequence for data dirs, which survives expiry, else its first
+    # appearance in the chain. Sequence number = snapshot id, as in the
+    # engine itself (dir_seqs, equality-delete seq): ids only grow.
+    added_in: dict[str, int] = {}
+    for s in snaps:
         extra = [eqpos[s["snapshot_id"]]] if s["snapshot_id"] in eqpos else []
         for d in s["manifest"] + s.get("delete_dirs", []) + extra:
-            added_in.setdefault(d, (s["snapshot_id"], seq))
+            added_in.setdefault(d, seqs.get(d, s["snapshot_id"]))
     snapshot_entries = []
-    for seq, s in enumerate(snaps, start=1):
+    for s in snaps:
         manifest_list_avro = os.path.join(mdir, f"snap-{s['snapshot_id']}-manifest-list.avro")
         manifest_list_json = os.path.join(mdir, f"snap-{s['snapshot_id']}.manifest-list.json")
         manifests_json = []
@@ -762,8 +784,8 @@ def write_iceberg_metadata(table: Table) -> str:
         for d in s["manifest"]:
             files = _load_dir_stats(table.path, d, meta)
             spec_rec = dir_specs.get(d, {"source": None, "transform": "identity", "spec_id": 0})
-            add_snap, add_seq = added_in.get(d, (s["snapshot_id"], seq))
-            mpath = _write_manifest_avro(table, meta, d, files, add_snap, add_seq, spec_rec)
+            add_snap = added_in[d]
+            mpath = _write_manifest_avro(table, meta, d, files, add_snap, add_snap, spec_rec)
             rows = sum(f["rows"] for f in files)
             added = add_snap == s["snapshot_id"]
             list_records.append(
@@ -772,8 +794,8 @@ def write_iceberg_metadata(table: Table) -> str:
                     "manifest_length": fsio.getsize(mpath),
                     "partition_spec_id": int(spec_rec.get("spec_id", 0)),
                     "content": 0,  # data
-                    "sequence_number": add_seq,
-                    "min_sequence_number": add_seq,
+                    "sequence_number": add_snap,
+                    "min_sequence_number": add_snap,
                     "added_snapshot_id": add_snap,
                     "added_files_count": len(files) if added else 0,
                     "existing_files_count": 0 if added else len(files),
@@ -820,10 +842,10 @@ def write_iceberg_metadata(table: Table) -> str:
         eq_extra = [eqpos[s["snapshot_id"]]] if s["snapshot_id"] in eqpos else []
         for d in s.get("delete_dirs", []) + eq_extra:
             files = _load_dir_stats(table.path, d, meta)
-            add_snap, add_seq = added_in.get(d, (s["snapshot_id"], seq))
+            add_snap = added_in[d]
             spec_rec = dir_specs.get(d, {"source": None, "transform": "identity", "spec_id": 0})
             mpath = _write_manifest_avro(
-                table, meta, d, files, add_snap, add_seq, spec_rec, content=1
+                table, meta, d, files, add_snap, add_snap, spec_rec, content=1
             )
             rows = sum(f["rows"] for f in files)
             added = add_snap == s["snapshot_id"]
@@ -833,8 +855,8 @@ def write_iceberg_metadata(table: Table) -> str:
                     "manifest_length": fsio.getsize(mpath),
                     "partition_spec_id": int(spec_rec.get("spec_id", 0)),
                     "content": 1,  # POSITION_DELETES manifest
-                    "sequence_number": add_seq,
-                    "min_sequence_number": add_seq,
+                    "sequence_number": add_snap,
+                    "min_sequence_number": add_snap,
                     "added_snapshot_id": add_snap,
                     "added_files_count": len(files) if added else 0,
                     "existing_files_count": 0 if added else len(files),
@@ -851,7 +873,7 @@ def write_iceberg_metadata(table: Table) -> str:
             metadata={
                 "snapshot-id": str(s["snapshot_id"]),
                 "parent-snapshot-id": str(s["parent_id"]),
-                "sequence-number": str(seq),
+                "sequence-number": str(s["snapshot_id"]),
                 "format-version": "2",
             },
         )
@@ -862,7 +884,7 @@ def write_iceberg_metadata(table: Table) -> str:
             {
                 "snapshot-id": s["snapshot_id"],
                 "parent-snapshot-id": s["parent_id"],
-                "sequence-number": seq,
+                "sequence-number": s["snapshot_id"],
                 "timestamp-ms": s["committed_at_ms"],
                 "manifest-list": manifest_list_avro,
                 "summary": {
@@ -887,7 +909,7 @@ def write_iceberg_metadata(table: Table) -> str:
         "format-version": 2,
         "table-uuid": meta.get("table_uuid", "00000000-0000-0000-0000-000000000000"),
         "location": table.path,
-        "last-sequence-number": len(snaps),
+        "last-sequence-number": snaps[-1]["snapshot_id"] if snaps else 0,
         "last-updated-ms": snaps[-1]["committed_at_ms"] if snaps else meta.get("created_at_ms", 0),
         "last-column-id": int(meta.get("last_column_id", len(ids))),
         "schemas": schemas,
@@ -983,15 +1005,19 @@ def write_iceberg_metadata(table: Table) -> str:
             },
         },
     }
-    # monotonic metadata version persisted in table meta — snapshot
-    # expiry shrinks the snapshot list, so len(snaps) would regress and
-    # overwrite historical vN files
-    version = int(meta.get("metadata_version", 0)) + 1
-    meta["metadata_version"] = version
-    table._write_meta(meta)
+    # next version = the hint's + 1. vN files are immutable history: the
+    # exclusive create skips a vN that already exists (a crash between
+    # the document and its hint, or another writer) instead of replacing
+    # it; the hint moves only once the document is whole
+    hint = os.path.join(mdir, "version-hint.text")
+    try:
+        version = int(fsio.read_text(hint).strip()) + 1
+    except FileNotFoundError:
+        version = 1
+    body = json.dumps(doc).encode()
     path = os.path.join(mdir, f"v{version}.metadata.json")
-    _atomic_write_json(path, doc)
-    fsio.write_bytes_atomic(
-        os.path.join(mdir, "version-hint.text"), str(version).encode(), uuid.uuid4().hex
-    )
+    while not fsio.try_create_exclusive(path, body):
+        version += 1
+        path = os.path.join(mdir, f"v{version}.metadata.json")
+    fsio.write_bytes_atomic(hint, str(version).encode(), uuid.uuid4().hex)
     return path

@@ -178,9 +178,7 @@ class TableSink:
             sid = self.table.upsert(batch_df, extra_summary=stamps)
         else:
             p = self.table._write_data(batch_df)
-            sid = self.table._commit_add(
-                "append", [p], {"added-records": p.rows, **stamps}
-            )
+            sid = self.table._commit("append", {"added-records": p.rows, **stamps}, [p])
         # advance the persistent watermark under the commit lock (a crash
         # between commit and this write is still covered by the snapshot-
         # summary scan above); a new checkpoint lineage takes over the

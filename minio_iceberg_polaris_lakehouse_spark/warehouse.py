@@ -40,11 +40,13 @@ via the derived partition directory after `attach_partition_filter`).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import time
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -1096,6 +1098,15 @@ class PendingData:
     stats: list[dict]
 
 
+def _dirname(d: PendingData | str) -> str:
+    return d.dirname if isinstance(d, PendingData) else d
+
+
+# Table._commit's default expected_parent: no conflict check (None is a
+# real parent — the empty table's)
+_UNCHECKED = object()
+
+
 class Table:
     def __init__(self, wh: Warehouse, ns: str, name: str):
         self.wh = wh
@@ -1207,232 +1218,185 @@ class Table:
         except FileNotFoundError:
             pass
 
-    def _append_snapshot(
-        self,
-        snaps: list[dict],
-        operation: str,
-        dirs: list[str],
-        summary: dict[str, Any],
-        delete_dirs: list[str] | None = None,
-        branch: str | None = None,
-        eq_deletes: list[dict] | None = None,
-        parent_id: int | None = None,
-    ) -> int:
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        if parent_id is not None:
-            # explicit base (branch commits pass their ref's snapshot so a
-            # branch re-pointed after a publish forks from the PUBLISHED
-            # head, not from stale branch-tagged history)
-            parent = parent_id
-        elif branch:
-            chain = [s for s in snaps if s.get("branch") == branch]
-            lineage = chain or self._main_snaps(snaps)
-            parent = lineage[-1]["snapshot_id"] if lineage else None
-        else:
-            mains = self._main_snaps(snaps)
-            parent = mains[-1]["snapshot_id"] if mains else None
-        entry = {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "committed_at_ms": int(time.time() * 1000),
-            "operation": operation,
-            "manifest": dirs,
-            # positional-delete files live on the SNAPSHOT (Iceberg v2
-            # merge-on-read): data dirs stay untouched, tombstones
-            # apply on read
-            "delete_dirs": delete_dirs or [],
-            # equality-delete files ({dir, cols, seq}): rows matching the
-            # key columns are dead IF their data sequence < seq
-            "eq_deletes": [
-                {**r, "seq": r["seq"] if r.get("seq") is not None else sid}
-                for r in (eq_deletes or [])
-            ],
-            "summary": summary,
-            # schema as of this commit — time travel projects THIS, not
-            # the table's current schema (Iceberg resolves time-travel
-            # reads with the snapshot's schema)
-            "schema": self._meta()["schema"],
-        }
-        if branch:
-            # staged on a named branch (write-audit-publish): invisible to
-            # main reads until fast_forward/cherry_pick publishes it
-            entry["branch"] = branch
-        snaps.append(entry)
-        # persist each dir's DATA SEQUENCE (the snapshot that first added
-        # it) in table meta: equality-delete applicability must survive
-        # expire_snapshots truncating the log it could otherwise be
-        # derived from
-        meta = self._meta()
-        seq_rec = meta.setdefault("dir_seqs", {})
-        changed = False
-        # Iceberg v3 row lineage: every dir first committed here gets a
-        # first-row-id base carved out of the table's next-row-id counter,
-        # advanced by the dir's footer row count — `_row_id` then derives
-        # as base + file offset + row position with no per-row storage
-        # (rewrites that carry rows materialize their ids instead; see
-        # _write_data(lineage_cols=True)). Mirrors the spec's rule that
-        # next-row-id advances by record_count of every added file.
-        row_rec = meta.setdefault("dir_row_ids", {})
-        next_row = int(meta.get("next_row_id", 0))
-        first_row_id = None
-        for d in dirs:
-            if d not in seq_rec:
-                seq_rec[d] = sid
-                changed = True
-            if d not in row_rec:
-                rows = sum(
-                    int(f.get("rows", 0)) for f in _load_dir_stats(self.path, d, meta)
-                )
-                row_rec[d] = next_row
-                if first_row_id is None:
-                    first_row_id = next_row
-                next_row += rows
-                changed = True
-        if changed:
-            meta["next_row_id"] = next_row
-            self._write_meta(meta)
-        if first_row_id is not None:
-            entry["first_row_id"] = first_row_id
-        _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": snaps})
-        # mirror the commit as Iceberg-v2-shaped open metadata so readers
-        # other than this engine can resolve schema + data files
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
-
-        write_iceberg_metadata(self)
-        return sid
-
-    def _record_pending(self, pending: list["PendingData"]) -> None:
-        """Merge freshly written dirs' specs into _meta.json. MUST run
-        inside the commit lock: commits also rewrite _meta.json
-        (write_iceberg_metadata bumps metadata_version), so an unlocked
-        read-modify-write here can lose a concurrent appender's dir_specs
-        entry — the Iceberg export would then list that directory with no
-        data files and independent readers would silently miss rows.
-        Per-file stats do NOT land here: they live in the dir's immutable
-        .stats.json sidecar (written lock-free with the data), keeping
-        this file O(dirs)."""
-        if not pending:
+    @contextlib.contextmanager
+    def _locked(self, held: bool = False) -> Iterator[None]:
+        """Hold the commit lock for the block. ``held``: the caller
+        already holds it (a multi-table transaction locks every table
+        before publishing any)."""
+        if held:
+            yield
             return
-        meta = self._meta()
-        for p in pending:
-            meta.setdefault("dir_specs", {})[p.dirname] = p.spec_rec
-        self._write_meta(meta)
-
-    @staticmethod
-    def _split_adds(adds: list) -> tuple[list[str], list["PendingData"]]:
-        """Commit inputs may be PendingData (normal write path) or raw dir
-        names (protocol-level tests / external tooling); raw names carry no
-        meta to record."""
-        dirs = [a.dirname if isinstance(a, PendingData) else a for a in adds]
-        return dirs, [a for a in adds if isinstance(a, PendingData)]
-
-    def _commit_add(
-        self, operation: str, adds: list, summary: dict[str, Any], branch: str | None = None
-    ) -> int:
-        """Commit that ADDS data dirs to whatever the current snapshot is.
-        Appends are commutative, so under the lock they always succeed —
-        two concurrent appenders both land, neither lost (Iceberg gives
-        appends the same fast-path retry). ``branch`` stages the commit on
-        a named branch instead of main (write-audit-publish): the base is
-        the branch's current head (the ref), and the ref advances to the
-        new snapshot — main readers never see it until published."""
-        new_dirs, pending = self._split_adds(adds)
         lock, token = self._acquire_commit_lock()
         try:
-            self._record_pending(pending)
-            snaps = self._snaps()
-            if branch:
-                meta = self._meta()
-                rec = meta.get("refs", {}).get(branch)
-                if rec is None or rec.get("type") != "BRANCH":
-                    raise WarehouseError(
-                        f"unknown branch {branch!r} on {self.ns}.{self.name} "
-                        "(create it first: create_ref(name, 'branch'))"
-                    )
-                base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
-                    snaps,
-                    operation,
-                    base["manifest"] + new_dirs,
-                    summary,
-                    base.get("delete_dirs", []),
-                    branch=branch,
-                    eq_deletes=base.get("eq_deletes", []),
-                    parent_id=base["snapshot_id"],
-                )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
-            mains = self._main_snaps(snaps)
-            live = (mains[-1]["manifest"] if mains else []) + new_dirs
-            # appends don't touch existing rows: the parent's tombstones
-            # (positional AND equality) stay in force — new rows carry a
-            # HIGHER sequence, so equality deletes can't touch them
-            inherited = mains[-1].get("delete_dirs", []) if mains else []
-            inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
-            return self._append_snapshot(
-                snaps, operation, live, summary, inherited, eq_deletes=inherited_eq
-            )
+            yield
         finally:
             self._release_commit_lock(lock, token)
 
-    def _commit_replace(
+    def _export(self) -> None:
+        """Mirror the table's state as open Iceberg metadata (imported at
+        call time: iceberg_export imports this module)."""
+        from minio_iceberg_polaris_lakehouse_spark import iceberg_export
+
+        iceberg_export.write_iceberg_metadata(self)
+
+    @contextlib.contextmanager
+    def _alter_meta(self, held: bool = False) -> Iterator[dict]:
+        """Metadata-only change (schema, spec, properties, refs, stats):
+        the block edits the yielded _meta.json under the commit lock, so
+        it neither loses nor is lost by a concurrent commit's dir_specs.
+        On a clean exit a changed meta is written back and exported once;
+        an exception in the block writes nothing."""
+        with self._locked(held):
+            meta = self._meta()
+            before = json.dumps(meta, sort_keys=True)
+            yield meta
+            if json.dumps(meta, sort_keys=True) != before:
+                self._write_meta(meta)
+                self._export()
+
+    def _head(
+        self, branch: str | None, meta: dict | None = None, snaps: list[dict] | None = None
+    ) -> dict:
+        """The snapshot a write builds on: main's head, or the snapshot
+        ``branch``'s ref points at (an unknown branch raises). An empty
+        table's head has no id and no dirs."""
+        snaps = self._snaps() if snaps is None else snaps
+        if branch is None:
+            mains = self._main_snaps(snaps)
+            return mains[-1] if mains else {"manifest": [], "snapshot_id": None}
+        rec = (self._meta() if meta is None else meta).get("refs", {}).get(branch)
+        if rec is None or rec.get("type") != "BRANCH":
+            raise WarehouseError(
+                f"unknown branch {branch!r} on {self.ns}.{self.name} "
+                "(create it first: create_ref(name, 'branch'))"
+            )
+        return next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
+
+    def _commit(
         self,
         operation: str,
-        adds: list,
         summary: dict[str, Any],
-        expected_parent: int | None,
+        adds: list = (),
+        *,
+        deletes: list = (),
+        eq_deletes: list[tuple[PendingData | str, list[str]]] = (),
+        base: dict | None = None,
         branch: str | None = None,
-        delete_dirs: list[str] | None = None,
-        eq_deletes: list[dict] | None = None,
+        expected_parent: Any = _UNCHECKED,
+        repoint: str | None = None,
+        held: bool = False,
     ) -> int:
-        """Commit that REPLACES the manifest based on state read at
-        ``expected_parent``. If another writer committed since, the result
-        would silently drop their rows — so it conflicts instead of
-        committing (optimistic concurrency; raise, caller re-reads and
-        retries). ``branch`` stages the replacement on a named branch
-        (write-audit-publish row-level DML): the conflict check runs
-        against the BRANCH head, the snapshot is branch-tagged (invisible
-        to main until fast_forward publishes it), and the ref advances."""
-        dirs, pending = self._split_adds(adds)
-        lock, token = self._acquire_commit_lock()
-        try:
+        """The one commit path (§2.11): append a snapshot to the log and
+        return its id.
+
+        The snapshot's lists are ``base``'s (default: the head's) plus
+        this commit's data dirs ``adds``, positional-delete dirs
+        ``deletes`` and equality-delete dirs ``eq_deletes`` (``(dir, key
+        columns)`` pairs; their sequence is the new snapshot's id). Dirs
+        are PendingData, whose specs the commit records, or names the
+        table already knows. The head is main's, or ``branch``'s ref
+        (write-audit-publish: the snapshot is branch-tagged, invisible to
+        main reads until published, and the ref advances); an unknown
+        branch raises. ``expected_parent`` makes the commit a
+        read-modify-write: if the head moved since the caller read it,
+        committing would drop the other writer's rows, so it raises
+        CommitConflictError instead (re-read and retry). Appends pass
+        none: they commute, so concurrent appenders all land.
+        ``repoint`` names one more ref to move to the new snapshot.
+
+        Crash ordering: every step is one atomic file swap and a crash
+        between two leaves a consistent table. (1) _meta.json gains the
+        new dirs' specs, data sequences and row-id bases; (2) the
+        snapshot log gains the snapshot; (3) the refs move (a second
+        _meta.json write, branch commits only); (4) the open Iceberg
+        metadata is exported. So the log never names a dir _meta.json
+        does not describe, and a ref never names a snapshot the log
+        lacks."""
+        with self._locked(held):
+            meta = self._meta()
             snaps = self._snaps()
-            if branch:
-                meta = self._meta()
-                rec = meta.get("refs", {}).get(branch)
-                if rec is None or rec.get("type") != "BRANCH":
-                    raise WarehouseError(
-                        f"unknown branch {branch!r} on {self.ns}.{self.name}"
-                    )
-                current = int(rec["snapshot_id"])
-            else:
-                mains = self._main_snaps(snaps)
-                current = mains[-1]["snapshot_id"] if mains else None
-            if current != expected_parent:
+            head = self._head(branch, meta, snaps)
+            parent = head["snapshot_id"]
+            if expected_parent is not _UNCHECKED and parent != expected_parent:
                 raise CommitConflictError(
                     f"{self.ns}.{self.name}: snapshot moved {expected_parent} -> "
-                    f"{current} during {operation}; re-read and retry"
+                    f"{parent} during {operation}; re-read and retry"
                 )
-            self._record_pending(pending)
-            sid = self._append_snapshot(
-                snaps,
-                operation,
-                dirs,
-                summary,
-                delete_dirs=delete_dirs,
-                branch=branch,
-                eq_deletes=eq_deletes,
-                parent_id=current if branch else None,
-            )
+            if base is None:
+                # building on the head keeps its tombstones (positional AND
+                # equality) in force; rows added here carry a HIGHER
+                # sequence, so the head's equality deletes can't touch them
+                base = head
+            sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+            manifest = base.get("manifest", []) + [_dirname(a) for a in adds]
+            entry = {
+                "snapshot_id": sid,
+                "parent_id": parent,
+                "committed_at_ms": int(time.time() * 1000),
+                "operation": operation,
+                "manifest": manifest,
+                # positional-delete files live on the SNAPSHOT (Iceberg v2
+                # merge-on-read): data dirs stay untouched, tombstones
+                # apply on read
+                "delete_dirs": base.get("delete_dirs", []) + [_dirname(d) for d in deletes],
+                # equality-delete files ({dir, cols, seq}): rows matching the
+                # key columns are dead IF their data sequence < seq
+                "eq_deletes": base.get("eq_deletes", [])
+                + [{"dir": _dirname(d), "cols": list(cols), "seq": sid} for d, cols in eq_deletes],
+                "summary": summary,
+                # schema as of this commit — time travel projects THIS, not
+                # the table's current schema (Iceberg resolves time-travel
+                # reads with the snapshot's schema)
+                "schema": meta["schema"],
+            }
             if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
+                entry["branch"] = branch
+            pending = [
+                p
+                for p in (*adds, *deletes, *(d for d, _ in eq_deletes))
+                if isinstance(p, PendingData)
+            ]
+            for p in pending:
+                meta.setdefault("dir_specs", {})[p.dirname] = p.spec_rec
+            # each dir's DATA SEQUENCE (the snapshot that first added it)
+            # lives in table meta: equality-delete applicability must
+            # survive expire_snapshots truncating the log it could
+            # otherwise be derived from
+            seq_rec = meta.setdefault("dir_seqs", {})
+            # Iceberg v3 row lineage: every dir first committed here gets a
+            # first-row-id base carved out of the table's next-row-id
+            # counter, advanced by the dir's footer row count — `_row_id`
+            # then derives as base + file offset + row position with no
+            # per-row storage (rewrites that carry rows materialize their
+            # ids instead; see _write_data(lineage_cols=True)). Mirrors the
+            # spec's rule that next-row-id advances by record_count of
+            # every added file.
+            row_rec = meta.setdefault("dir_row_ids", {})
+            next_row = int(meta.get("next_row_id", 0))
+            changed = bool(pending)
+            for d in manifest:
+                if d not in seq_rec:
+                    seq_rec[d] = sid
+                    changed = True
+                if d not in row_rec:
+                    row_rec[d] = next_row
+                    entry.setdefault("first_row_id", next_row)
+                    next_row += sum(
+                        int(f.get("rows", 0)) for f in _load_dir_stats(self.path, d, meta)
+                    )
+                    changed = True
+            if changed:
+                meta["next_row_id"] = next_row
                 self._write_meta(meta)
+            snaps.append(entry)
+            _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": snaps})
+            moved = [r for r in (branch, repoint) if r]
+            for r in moved:
+                meta["refs"][r]["snapshot_id"] = sid
+            if moved:
+                self._write_meta(meta)
+            self._export()
             return sid
-        finally:
-            self._release_commit_lock(lock, token)
 
     def current_snapshot_id(self) -> int | None:
         mains = self._main_snaps()
@@ -1684,7 +1648,7 @@ class Table:
         evaluated while `_metadata` and the `_lin_*` columns are in scope).
 
         Derived rule (the spec's inheritance): `_row_id` = the dir's
-        first-row-id base (assigned at commit, `_append_snapshot`) + the
+        first-row-id base (assigned at commit, `_commit`) + the
         file's row-count offset within the dir (footer stats, canonical
         path order) + the row's position in the file — zero per-row
         storage for plain appends. A materialized `_lin_row_id` (written
@@ -1796,12 +1760,13 @@ class Table:
             df = df.unionByName(project(spec, other, d))
         return df
 
-    def _dir_seqs(self) -> dict[str, int]:
+    def _dir_seqs(self, meta: dict | None = None, snaps: list[dict] | None = None) -> dict[str, int]:
         """Data sequence number per dir: the snapshot that first added it.
         Read from the commit-time record in table meta (which survives
         snapshot expiry); legacy dirs fall back to the log walk."""
-        seqs = {d: int(v) for d, v in self._meta().get("dir_seqs", {}).items()}
-        for s in self._main_snaps():
+        meta = self._meta() if meta is None else meta
+        seqs = {d: int(v) for d, v in meta.get("dir_seqs", {}).items()}
+        for s in self._main_snaps(snaps):
             for d in s["manifest"]:
                 seqs.setdefault(d, s["snapshot_id"])
         return seqs
@@ -2522,7 +2487,7 @@ class Table:
         O(files) metadata-only, the same stats an Iceberg commit records
         in its manifest). Does NOT touch _meta.json — the dir's spec and
         stats ride in the returned PendingData and are merged into meta by
-        the commit, inside the commit lock (see _record_pending)."""
+        the commit, inside the commit lock (see _commit)."""
         dirname = f"data-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.path, dirname)
         meta = self._meta()
@@ -2630,7 +2595,7 @@ class Table:
     def append(self, df: DataFrame, branch: str | None = None) -> int:
         """Append-only INSERT: duplicates by design (§2.11). Appends are
         commutative — two concurrent appenders both survive (see
-        _commit_add). ``branch`` stages the write on a named branch
+        _commit). ``branch`` stages the write on a named branch
         (write-audit-publish): main readers don't see it until
         fast_forward/cherry_pick publishes it. With the Flink-parity
         table property ``write.upsert.enabled=true``, every append (and
@@ -2638,7 +2603,7 @@ class Table:
         if self._meta()["properties"].get("write.upsert.enabled", "").lower() == "true":
             return self.upsert(df, branch=branch)
         p = self._write_data(df)
-        return self._commit_add("append", [p], {"added-records": p.rows}, branch=branch)
+        return self._commit("append", {"added-records": p.rows}, [p], branch=branch)
 
     def insert_values(self, rows: list[tuple], branch: str | None = None) -> int:
         """INSERT INTO t VALUES ... (reference S7: getting_started.ipynb:96)."""
@@ -2651,17 +2616,12 @@ class Table:
         an empty list clears the identity. The open-metadata export
         mirrors the declaration as identifier-field-ids in the schema
         JSON so foreign engines see the same contract."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        names = set(schema.fieldNames())
-        missing = [c for c in columns if c not in names]
-        if missing:
-            raise WarehouseError(f"identifier fields not in schema: {missing}")
-        meta["identifier_fields"] = list(columns)
-        self._write_meta(meta)
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
-
-        write_iceberg_metadata(self)
+        with self._alter_meta() as meta:
+            names = set(T.StructType.fromJson(json.loads(meta["schema"])).fieldNames())
+            missing = [c for c in columns if c not in names]
+            if missing:
+                raise WarehouseError(f"identifier fields not in schema: {missing}")
+            meta["identifier_fields"] = list(columns)
 
     def identifier_fields(self) -> list[str]:
         return list(self._meta().get("identifier_fields", []))
@@ -2706,43 +2666,7 @@ class Table:
         )
         summary = {"added-delete-files": 1, "added-equality-deletes": k}
         summary.update(extra_summary or {})
-        new_eq = {"dir": del_dir, "cols": list(cols), "seq": None}
-        lock, token = self._acquire_commit_lock()
-        try:
-            self._record_pending([pend])
-            snaps = self._snaps()
-            if branch:
-                meta = self._meta()
-                rec = meta.get("refs", {}).get(branch)
-                if rec is None or rec.get("type") != "BRANCH":
-                    raise WarehouseError(
-                        f"unknown branch {branch!r} on {self.ns}.{self.name} "
-                        "(create it first: create_ref(name, 'branch'))"
-                    )
-                base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
-                    snaps,
-                    "delete",
-                    base["manifest"],
-                    summary,
-                    base.get("delete_dirs", []),
-                    branch=branch,
-                    eq_deletes=base.get("eq_deletes", []) + [new_eq],
-                    parent_id=base["snapshot_id"],
-                )
-                meta = self._meta()
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
-            mains = self._main_snaps(snaps)
-            live = mains[-1]["manifest"] if mains else []
-            inherited = mains[-1].get("delete_dirs", []) if mains else []
-            inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
-            return self._append_snapshot(
-                snaps, "delete", live, summary, inherited, eq_deletes=inherited_eq + [new_eq]
-            )
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit("delete", summary, eq_deletes=[(pend, cols)], branch=branch)
 
     def upsert(
         self,
@@ -2809,48 +2733,9 @@ class Table:
             "upsert": "true",
         }
         summary.update(extra_summary or {})  # e.g. streaming-sink batch stamps
-        new_eq = {"dir": del_dir, "cols": list(cols), "seq": None}  # seq = this commit
-        lock, token = self._acquire_commit_lock()
-        try:
-            self._record_pending([p, pend_del])
-            snaps = self._snaps()
-            if branch:
-                meta = self._meta()
-                rec = meta.get("refs", {}).get(branch)
-                if rec is None or rec.get("type") != "BRANCH":
-                    raise WarehouseError(
-                        f"unknown branch {branch!r} on {self.ns}.{self.name} "
-                        "(create it first: create_ref(name, 'branch'))"
-                    )
-                base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
-                    snaps,
-                    "overwrite",
-                    base["manifest"] + [p.dirname],
-                    summary,
-                    base.get("delete_dirs", []),
-                    branch=branch,
-                    eq_deletes=base.get("eq_deletes", []) + [new_eq],
-                    parent_id=base["snapshot_id"],
-                )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
-            mains = self._main_snaps(snaps)
-            live = (mains[-1]["manifest"] if mains else []) + [p.dirname]
-            inherited = mains[-1].get("delete_dirs", []) if mains else []
-            inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
-            return self._append_snapshot(
-                snaps,
-                "overwrite",
-                live,
-                summary,
-                inherited,
-                eq_deletes=inherited_eq + [new_eq],
-            )
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit(
+            "overwrite", summary, [p], eq_deletes=[(pend_del, cols)], branch=branch
+        )
 
     def add_files(self, source_dir: str) -> tuple[int, int]:
         """Iceberg's `add_files` procedure: import an EXISTING parquet
@@ -2923,10 +2808,10 @@ class Table:
             "columns": [f.name for f in fschema.fields],  # physical file columns
         }
         p = PendingData(dirname, sum(s["rows"] for s in stats), spec_rec, stats)
-        sid = self._commit_add(
+        sid = self._commit(
             "append",
-            [p],
             {"added-records": p.rows, "added-data-files": len(files), "import-source": src},
+            [p],
         )
         return sid, len(files)
 
@@ -2946,36 +2831,11 @@ class Table:
         ):
             return self.overwrite_partitions(df, branch=branch)
         p = self._write_data(df)
-        lock, token = self._acquire_commit_lock()
-        try:
-            self._record_pending([p])
-            if branch:
-                head = self._branch_head(branch)
-                sid = self._append_snapshot(
-                    self._snaps(),
-                    "overwrite",
-                    [p.dirname],
-                    {"replaced": True, "added-records": p.rows},
-                    branch=branch,
-                    parent_id=head,
-                )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
-            return self._append_snapshot(
-                self._snaps(), "overwrite", [p.dirname], {"replaced": True, "added-records": p.rows}
-            )
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit(
+            "overwrite", {"replaced": True, "added-records": p.rows}, [p], base={}, branch=branch
+        )
 
     # ---------------- DML beyond append (M1) ----------------
-    def _branch_head(self, branch: str) -> int:
-        rec = self._meta().get("refs", {}).get(branch)
-        if rec is None or rec.get("type") != "BRANCH":
-            raise WarehouseError(f"unknown branch {branch!r} on {self.ns}.{self.name}")
-        return int(rec["snapshot_id"])
-
     def delete_where(self, condition: str, mode: str | None = None, branch: str | None = None) -> int:
         """DELETE FROM t WHERE ... in either Iceberg row-level mode.
 
@@ -3000,7 +2860,7 @@ class Table:
             return self._delete_where_mor(condition, branch=branch)
         if mode == "merge-on-read-equality":
             return self._delete_where_mor_eq(condition, branch=branch)
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
+        parent = self._head(branch)["snapshot_id"]
         # surviving rows keep their Iceberg v3 row ids through the rewrite
         cur = (
             self.read(version=branch, lineage=True)
@@ -3009,8 +2869,8 @@ class Table:
         )
         remaining = cur.filter(f"NOT ({condition})")
         p = self._write_data(remaining, lineage_cols=True)
-        return self._commit_replace(
-            "delete", [p], {"predicate": condition}, parent, branch=branch
+        return self._commit(
+            "delete", {"predicate": condition}, [p], base={}, expected_parent=parent, branch=branch
         )
 
     def overwrite_partitions(self, df: DataFrame, branch: str | None = None) -> int:
@@ -3031,8 +2891,7 @@ class Table:
             raise WarehouseError(
                 "dynamic overwrite needs a partitioned table; use overwrite()"
             )
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        snap = self._resolve(version=branch) if branch else self._resolve()
+        snap = self._head(branch)
         p = self._write_data(df)
         schema = self.schema()
         src_dt = schema[spec.source].dataType
@@ -3062,10 +2921,9 @@ class Table:
         hits.write.option("compression", "zstd").parquet(out)
         dstats = _parquet_footer_stats(out)
         n_del = sum(s["rows"] for s in dstats)
-        pends: list[PendingData] = [p]
-        new_delete_dirs: list[str] = []
+        deletes = []
         if n_del:
-            pends.append(
+            deletes.append(
                 PendingData(
                     ddir,
                     n_del,
@@ -3073,7 +2931,6 @@ class Table:
                     dstats,
                 )
             )
-            new_delete_dirs = [ddir]
         else:
             fsio.rmtree(out)  # first write into fresh partitions: no tombstones
         summary = {
@@ -3082,37 +2939,14 @@ class Table:
             "added-records": p.rows,
             "added-position-deletes": n_del,
         }
-        lock, token = self._acquire_commit_lock()
-        try:
-            snaps = self._snaps()
-            if branch:
-                current = self._branch_head(branch)
-            else:
-                mains = self._main_snaps(snaps)
-                current = mains[-1]["snapshot_id"] if mains else None
-            if current != parent:
-                raise CommitConflictError(
-                    f"{self.ns}.{self.name}: snapshot moved {parent} -> "
-                    f"{current} during dynamic overwrite; re-read and retry"
-                )
-            self._record_pending(pends)
-            sid = self._append_snapshot(
-                snaps,
-                "overwrite",
-                snap["manifest"] + [p.dirname],
-                summary,
-                snap.get("delete_dirs", []) + new_delete_dirs,
-                branch=branch,
-                eq_deletes=snap.get("eq_deletes", []),
-                parent_id=parent if branch else None,
-            )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit(
+            "overwrite",
+            summary,
+            [p],
+            deletes=deletes,
+            expected_parent=snap["snapshot_id"],
+            branch=branch,
+        )
 
     def _live_with_pos(self, snap: dict) -> DataFrame:
         """Live rows of a snapshot WITH `_file`/`_pos` lineage: data dirs
@@ -3140,9 +2974,7 @@ class Table:
         the parent's data dirs and adds the tombstones. O(matches) write
         instead of O(table) — the scale win merge-on-read exists for.
         ``branch`` stages against and onto the branch (WAP routing)."""
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        snap = self._resolve(version=branch) if branch else self._resolve()
-        existing = snap.get("delete_dirs", [])
+        snap = self._head(branch)
         live = self._live_with_pos(snap)
         hits = live.filter(f"({condition})").select(
             self._plain_path(F.col("_file")).alias("file_path"), F.col("_pos").alias("pos")
@@ -3155,41 +2987,13 @@ class Table:
         pend = PendingData(
             dirname, n, {"source": None, "transform": "identity", "spec_id": 0, "content": "deletes"}, stats
         )
-        lock, token = self._acquire_commit_lock()
-        try:
-            snaps = self._snaps()
-            if branch:
-                current = self._branch_head(branch)
-            else:
-                mains = self._main_snaps(snaps)
-                current = mains[-1]["snapshot_id"] if mains else None
-            if current != parent:
-                raise CommitConflictError(
-                    f"{self.ns}.{self.name}: snapshot moved {parent} -> "
-                    f"{current} during merge-on-read delete; re-read and retry"
-                )
-            self._record_pending([pend])
-            sid = self._append_snapshot(
-                snaps,
-                "delete",
-                snap["manifest"],
-                {
-                    "predicate": condition,
-                    "added-delete-files": 1,
-                    "added-position-deletes": n,
-                },
-                existing + [dirname],
-                branch=branch,
-                eq_deletes=snap.get("eq_deletes", []),
-                parent_id=parent if branch else None,
-            )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit(
+            "delete",
+            {"predicate": condition, "added-delete-files": 1, "added-position-deletes": n},
+            deletes=[pend],
+            expected_parent=snap["snapshot_id"],
+            branch=branch,
+        )
 
     def _delete_where_mor_eq(self, condition: str, branch: str | None = None) -> int:
         """Merge-on-read EQUALITY delete (Iceberg v2's second delete-file
@@ -3214,8 +3018,7 @@ class Table:
         unknown = [c for c in cols if c not in schema_cols]
         if unknown:
             raise WarehouseError(f"equality columns not in schema: {unknown}")
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        snap = self._resolve(version=branch) if branch else self._resolve()
+        parent = self._head(branch)["snapshot_id"]
         src = self.read(version=branch) if branch else self.read()
         keys = src.filter(f"({condition})").select(*cols).dropDuplicates(cols)
         dirname = f"delete-eq-{uuid.uuid4().hex[:12]}"
@@ -3229,42 +3032,13 @@ class Table:
             {"source": None, "transform": "identity", "spec_id": 0, "content": "eq-deletes"},
             stats,
         )
-        lock, token = self._acquire_commit_lock()
-        try:
-            snaps = self._snaps()
-            if branch:
-                current = self._branch_head(branch)
-            else:
-                mains = self._main_snaps(snaps)
-                current = mains[-1]["snapshot_id"] if mains else None
-            if current != parent:
-                raise CommitConflictError(
-                    f"{self.ns}.{self.name}: snapshot moved {parent} -> "
-                    f"{current} during equality delete; re-read and retry"
-                )
-            self._record_pending([pend])
-            sid = self._append_snapshot(
-                snaps,
-                "delete",
-                snap["manifest"],
-                {
-                    "predicate": condition,
-                    "added-delete-files": 1,
-                    "added-equality-deletes": n,
-                },
-                snap.get("delete_dirs", []),
-                branch=branch,
-                eq_deletes=snap.get("eq_deletes", [])
-                + [{"dir": dirname, "cols": cols, "seq": None}],  # seq = this commit
-                parent_id=parent if branch else None,
-            )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit(
+            "delete",
+            {"predicate": condition, "added-delete-files": 1, "added-equality-deletes": n},
+            eq_deletes=[(pend, cols)],
+            expected_parent=parent,
+            branch=branch,
+        )
 
     def update_where(
         self,
@@ -3287,7 +3061,7 @@ class Table:
         mode = mode or self._meta()["properties"].get("write.update.mode", "copy-on-write")
         if mode == "merge-on-read":
             return self._update_where_mor(assignments, condition, branch=branch)
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
+        parent = self._head(branch)["snapshot_id"]
         # Iceberg v3 row lineage through copy-on-write UPDATE: every row
         # keeps its _row_id (updates change values, not identity); rows the
         # predicate matches get a NULL materialized update-sequence, which
@@ -3313,8 +3087,8 @@ class Table:
             .alias("_last_updated_sequence_number"),
         )
         p = self._write_data(updated, lineage_cols=True)
-        return self._commit_replace(
-            "update", [p], {"predicate": condition}, parent, branch=branch
+        return self._commit(
+            "update", {"predicate": condition}, [p], base={}, expected_parent=parent, branch=branch
         )
 
     def _update_where_mor(
@@ -3324,9 +3098,7 @@ class Table:
         matched rows' old positions AND append a data dir holding their
         rewritten versions, in ONE snapshot."""
         cols = self.schema().fieldNames()
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        snap = self._resolve(version=branch) if branch else self._resolve()
-        existing = snap.get("delete_dirs", [])
+        snap = self._head(branch)
         live = self._live_with_pos(snap)
         # matched feeds TWO writes (tombstone positions + rewritten
         # rows); persist it so the full-table scan + predicate run once,
@@ -3354,42 +3126,20 @@ class Table:
             p = self._write_data(rewritten)
         finally:
             matched.unpersist()
-        lock, token = self._acquire_commit_lock()
-        try:
-            snaps = self._snaps()
-            if branch:
-                current = self._branch_head(branch)
-            else:
-                mains = self._main_snaps(snaps)
-                current = mains[-1]["snapshot_id"] if mains else None
-            if current != parent:
-                raise CommitConflictError(
-                    f"{self.ns}.{self.name}: snapshot moved {parent} -> "
-                    f"{current} during merge-on-read update; re-read and retry"
-                )
-            self._record_pending([pend_del, p])
-            sid = self._append_snapshot(
-                snaps,
-                "update",
-                snap["manifest"] + [p.dirname],
-                {
-                    "predicate": condition,
-                    "added-delete-files": 1,
-                    "added-position-deletes": n_del,
-                    "added-records": p.rows,
-                },
-                existing + [ddir],
-                branch=branch,
-                eq_deletes=snap.get("eq_deletes", []),
-                parent_id=parent if branch else None,
-            )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
-        finally:
-            self._release_commit_lock(lock, token)
+        summary = {
+            "predicate": condition,
+            "added-delete-files": 1,
+            "added-position-deletes": n_del,
+            "added-records": p.rows,
+        }
+        return self._commit(
+            "update",
+            summary,
+            [p],
+            deletes=[pend_del],
+            expected_parent=snap["snapshot_id"],
+            branch=branch,
+        )
 
     def merge_into(
         self,
@@ -3493,7 +3243,7 @@ class Table:
         nbs = not_matched_by_source_arm
         if nbs and nbs.get("action") not in ("update", "delete"):
             raise WarehouseError(f"bad NOT MATCHED BY SOURCE action: {nbs.get('action')}")
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
+        parent = self._head(branch)["snapshot_id"]
         cols = [f.name for f in self.schema().fields]
         tgt0 = (
             self.read(version=branch, lineage=True)
@@ -3612,7 +3362,9 @@ class Table:
             "insert": str(bool(insert_arm)),
             "not-matched-by-source": (nbs or {}).get("action", ""),
         }
-        return self._commit_replace("merge", [p], summary, parent, branch=branch)
+        return self._commit(
+            "merge", summary, [p], base={}, expected_parent=parent, branch=branch
+        )
 
     # ---------------- schema evolution (D10) ----------------
     def add_column(self, name: str, dtype: str, default: str | None = None) -> None:
@@ -3628,40 +3380,39 @@ class Table:
         values, including explicit NULLs — the default applies by the
         column's absence from a file, the name-based analogue of
         Iceberg's absent-field-id rule."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name in [f.name for f in schema.fields]:
-            raise WarehouseError(f"column {name} exists")
         # fromDDL accepts any case and parameterized types (DECIMAL(10,2))
-        schema = schema.add(T.StructType.fromDDL(f"{name} {dtype}").fields[0])
-        if default is not None:
-            lit = default.strip()
+        new_field = T.StructType.fromDDL(f"{name} {dtype}").fields[0]
+        lit = default.strip() if default is not None else None
+        if lit is not None:
             val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
             if val is None and lit.upper() != "NULL":
                 raise WarehouseError(
                     f"DEFAULT {default} is not a valid {dtype} literal"
                 )
-            if lit.upper() != "NULL":
+        with self._alter_meta() as meta:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name in schema.fieldNames():
+                raise WarehouseError(f"column {name} exists")
+            schema = schema.add(new_field)
+            if lit is not None and lit.upper() != "NULL":
                 meta.setdefault("column_defaults", {})[name] = lit
-        meta["schema"] = schema.json()
-        meta["last_column_id"] = int(meta.get("last_column_id", len(schema.fields) - 1)) + 1
-        meta.setdefault("column_ids", {})[name] = meta["last_column_id"]
-        self._write_meta(meta)
+            meta["schema"] = schema.json()
+            meta["last_column_id"] = int(meta.get("last_column_id", len(schema.fields) - 1)) + 1
+            meta.setdefault("column_ids", {})[name] = meta["last_column_id"]
 
     def drop_column(self, name: str) -> None:
         """Metadata-only DROP COLUMN — data files are untouched; reads
         simply stop projecting the column (reference README.md:132-133:
         add/drop/rename without rewriting files)."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name not in schema.fieldNames():
-            raise WarehouseError(f"column {name} does not exist")
-        if meta["partition"].get("source") == name:
-            raise WarehouseError(f"column {name} is the partition source")
-        meta["schema"] = T.StructType([f for f in schema.fields if f.name != name]).json()
-        meta.get("column_defaults", {}).pop(name, None)
-        meta.get("column_write_defaults", {}).pop(name, None)
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name not in schema.fieldNames():
+                raise WarehouseError(f"column {name} does not exist")
+            if meta["partition"].get("source") == name:
+                raise WarehouseError(f"column {name} is the partition source")
+            meta["schema"] = T.StructType([f for f in schema.fields if f.name != name]).json()
+            meta.get("column_defaults", {}).pop(name, None)
+            meta.get("column_write_defaults", {}).pop(name, None)
 
     def set_column_default(self, name: str, default: str | None) -> None:
         """ALTER COLUMN … SET DEFAULT <literal> / DROP DEFAULT (Iceberg
@@ -3671,21 +3422,20 @@ class Table:
         changing the default never rewrites history. DROP DEFAULT is an
         explicit 'fill NULL' marker that overrides an initial-default
         for writes."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name not in schema.fieldNames():
-            raise WarehouseError(f"column {name} does not exist")
-        wd = meta.setdefault("column_write_defaults", {})
-        if default is None:
-            wd[name] = None
-        else:
-            lit = default.strip()
-            dtype = schema[name].dataType.simpleString()
-            val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
-            if val is None and lit.upper() != "NULL":
-                raise WarehouseError(f"DEFAULT {default} is not a valid {dtype} literal")
-            wd[name] = lit
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name not in schema.fieldNames():
+                raise WarehouseError(f"column {name} does not exist")
+            wd = meta.setdefault("column_write_defaults", {})
+            if default is None:
+                wd[name] = None
+            else:
+                lit = default.strip()
+                dtype = schema[name].dataType.simpleString()
+                val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
+                if val is None and lit.upper() != "NULL":
+                    raise WarehouseError(f"DEFAULT {default} is not a valid {dtype} literal")
+                wd[name] = lit
 
     def evolve_partition_spec(self, partition_by: str | None, transform: str = "identity") -> None:
         """Partition-spec evolution without rewrites (reference
@@ -3693,42 +3443,41 @@ class Table:
         transform; existing dirs keep their recorded spec and continue to
         prune by it. Metadata-only."""
         if partition_by is not None:
-            if partition_by not in self.schema().fieldNames():
-                raise WarehouseError(f"unknown partition source {partition_by}")
             PartitionSpec(partition_by, transform).expr()  # validates transform
-        meta = self._meta()
-        new_spec = {"source": partition_by, "transform": transform}
-        meta["partition"] = dict(new_spec)
-        history = meta.setdefault(
-            "spec_history", [{"source": None, "transform": "identity"}]
-        )
-        if new_spec not in history:
-            history.append(new_spec)
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            names = T.StructType.fromJson(json.loads(meta["schema"])).fieldNames()
+            if partition_by is not None and partition_by not in names:
+                raise WarehouseError(f"unknown partition source {partition_by}")
+            new_spec = {"source": partition_by, "transform": transform}
+            meta["partition"] = dict(new_spec)
+            history = meta.setdefault(
+                "spec_history", [{"source": None, "transform": "identity"}]
+            )
+            if new_spec not in history:
+                history.append(new_spec)
 
     def rename_column(self, old: str, new: str) -> None:
         """Metadata-only RENAME COLUMN: reads map old physical names
         through the rename chain (see _dir_frames), so no files are
         rewritten and values survive. The current partition spec's source
         cannot be renamed (specs are keyed by name here, not field id)."""
-        if self._meta()["partition"].get("source") == old:
-            raise WarehouseError(f"column {old} is the partition source")
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        fields = [
-            T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-        meta["schema"] = T.StructType(fields).json()
-        meta.setdefault("renames", []).append({"from": old, "to": new})
-        ids = meta.setdefault("column_ids", {})
-        if old in ids:
-            ids[new] = ids.pop(old)  # rename keeps the field id (Iceberg)
-        for key in ("column_defaults", "column_write_defaults"):
-            rec = meta.get(key, {})
-            if old in rec:
-                rec[new] = rec.pop(old)  # the default follows the column
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            if meta["partition"].get("source") == old:
+                raise WarehouseError(f"column {old} is the partition source")
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            fields = [
+                T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
+                for f in schema.fields
+            ]
+            meta["schema"] = T.StructType(fields).json()
+            meta.setdefault("renames", []).append({"from": old, "to": new})
+            ids = meta.setdefault("column_ids", {})
+            if old in ids:
+                ids[new] = ids.pop(old)  # rename keeps the field id (Iceberg)
+            for key in ("column_defaults", "column_write_defaults"):
+                rec = meta.get(key, {})
+                if old in rec:
+                    rec[new] = rec.pop(old)  # the default follows the column
 
     @staticmethod
     def _is_widening(old: T.DataType, new: T.DataType) -> bool:
@@ -3750,26 +3499,23 @@ class Table:
         physical type upcasts on read (Spark's parquet reader resolves the
         declared read schema against each file's footer), exactly
         Iceberg's field-id type promotion."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name not in schema.fieldNames():
-            raise WarehouseError(f"no such column {name}")
         new_dt = T.StructType.fromDDL(f"x {dtype}").fields[0].dataType
-        old_dt = schema[name].dataType
-        if old_dt == new_dt:
-            return
-        if not self._is_widening(old_dt, new_dt):
-            raise WarehouseError(
-                f"cannot change {name} from {old_dt.simpleString()} to "
-                f"{new_dt.simpleString()}: only widening promotions are allowed "
-                "(int->bigint, float->double, decimal precision growth)"
-            )
-        fields = [
-            T.StructField(f.name, new_dt if f.name == name else f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-        meta["schema"] = T.StructType(fields).json()
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name not in schema.fieldNames():
+                raise WarehouseError(f"no such column {name}")
+            old_dt = schema[name].dataType
+            if old_dt != new_dt and not self._is_widening(old_dt, new_dt):
+                raise WarehouseError(
+                    f"cannot change {name} from {old_dt.simpleString()} to "
+                    f"{new_dt.simpleString()}: only widening promotions are allowed "
+                    "(int->bigint, float->double, decimal precision growth)"
+                )
+            fields = [
+                T.StructField(f.name, new_dt if f.name == name else f.dataType, f.nullable)
+                for f in schema.fields
+            ]
+            meta["schema"] = T.StructType(fields).json()
 
     def set_write_order(self, *columns: str) -> None:
         """ALTER TABLE … WRITE ORDERED BY (Iceberg sort orders): future
@@ -3780,14 +3526,12 @@ class Table:
         overlapping" into "prunes 99% of files" at 100 TB). Metadata-only;
         existing files are untouched (compact() rewrites them under the
         order). Empty column list clears the order."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        names = set(schema.fieldNames())
-        missing = [c for c in columns if c not in names]
-        if missing:
-            raise WarehouseError(f"sort columns not in schema: {missing}")
-        meta["sort_order"] = list(columns)
-        self._write_meta(meta)
+        with self._alter_meta() as meta:
+            names = set(T.StructType.fromJson(json.loads(meta["schema"])).fieldNames())
+            missing = [c for c in columns if c not in names]
+            if missing:
+                raise WarehouseError(f"sort columns not in schema: {missing}")
+            meta["sort_order"] = list(columns)
 
     # ---------------- metadata tables (S3/S4) ----------------
     def history(self) -> DataFrame:
@@ -3812,7 +3556,7 @@ class Table:
         """<table>.snapshots (reference getting_started.ipynb:144-152,169):
         committed_at, snapshot_id, parent_id, operation, manifest_list, summary,
         plus Iceberg v3's first_row_id (NULL for commits that added no
-        data — lineage bases are carved per added dir, _append_snapshot)."""
+        data — lineage bases are carved per added dir, _commit)."""
         snaps = self._snaps()
         rows = [
             Row(
@@ -4197,8 +3941,7 @@ class Table:
         added_bundles). Dirs committed after the rewrite read their own
         sidecars until the next rewrite folds them in."""
         bsize = bundle_size or Table.BUNDLE_SIZE
-        lock, token = self._acquire_commit_lock()
-        try:
+        with self._locked():
             meta = self._meta()
             dirs: set[str] = set()
             for s in self._snaps():
@@ -4225,8 +3968,6 @@ class Table:
             meta["dir_bundles"] = new_map
             self._write_meta(meta)
             return (len(todo), added)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def create_ref(self, name: str, ref_type: str = "tag", snapshot_id: int | None = None) -> None:
         """Named ref (Iceberg branch/tag) pinning a snapshot: time travel
@@ -4245,16 +3986,11 @@ class Table:
         if sid is None:
             raise WarehouseError("cannot create a ref on an empty table")
         self._resolve(version=int(sid))  # validates the snapshot exists
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             meta.setdefault("refs", {})[name] = {
                 "snapshot_id": int(sid),
                 "type": ref_type.upper(),
             }
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def fast_forward(self, branch: str) -> int:
         """CALL system.fast_forward('main', branch): PUBLISH a branch's
@@ -4265,11 +4001,8 @@ class Table:
         new main snapshot re-pointing at the branch head's manifest (the
         log stays append-only; observable behavior matches Iceberg's ref
         move, with lineage recorded in the summary)."""
-        lock, token = self._acquire_commit_lock()
-        try:
+        with self._locked():
             return self._fast_forward_locked(branch)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def _fast_forward_locked(self, branch: str, check_only: bool = False) -> int | None:
         """fast_forward body — caller MUST hold this table's commit lock.
@@ -4279,17 +4012,12 @@ class Table:
         table before any table publishes, so a conflict on the last table
         cannot leave the first ones already published."""
         snaps = self._snaps()
-        meta = self._meta()
-        rec = meta.get("refs", {}).get(branch)
-        if rec is None or rec.get("type") != "BRANCH":
-            raise WarehouseError(f"unknown branch {branch!r} on {self.ns}.{self.name}")
-        by_id = {s["snapshot_id"]: s for s in snaps}
-        head = by_id[int(rec["snapshot_id"])]
-        mains = self._main_snaps(snaps)
-        main_head = mains[-1]["snapshot_id"] if mains else None
+        head = self._head(branch, snaps=snaps)
+        main_head = self._head(None, snaps=snaps)["snapshot_id"]
         if not head.get("branch"):
             return main_head  # branch never diverged — nothing to publish
         # fork base: walk parents through the branch-staged snapshots
+        by_id = {s["snapshot_id"]: s for s in snaps}
         base = head
         while base.get("branch"):
             nxt = by_id.get(base.get("parent_id"))
@@ -4307,29 +4035,18 @@ class Table:
             )
         if check_only:
             return None
-        sid = self._append_snapshot(
-            snaps,
-            "append",
-            head["manifest"],
-            {"published-from-branch": branch, "published-snapshot-id": head["snapshot_id"]},
-            head.get("delete_dirs", []),
-            eq_deletes=head.get("eq_deletes", []),
-        )
-        # re-point the branch at the published main head (Iceberg's
+        # the branch is re-pointed at the published main head (Iceberg's
         # fast_forward leaves branch == main): the NEXT staged commit
         # forks from the published state, so repeated stage+publish
         # cycles on one branch — the normal WAP workflow — keep
         # fast-forwarding instead of conflicting on a stale fork base
-        meta = self._meta()  # re-read: the commit re-exported metadata
-        meta["refs"][branch]["snapshot_id"] = sid
-        self._write_meta(meta)
-        # re-export so the open metadata's refs reflect the re-point
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-            write_iceberg_metadata,
+        return self._commit(
+            "append",
+            {"published-from-branch": branch, "published-snapshot-id": head["snapshot_id"]},
+            base=head,
+            repoint=branch,
+            held=True,
         )
-
-        write_iceberg_metadata(self)
-        return sid
 
     def cherry_pick(self, snapshot_id: int) -> int:
         """CALL system.cherrypick_snapshot: apply ONE staged snapshot's
@@ -4338,10 +4055,8 @@ class Table:
         — their delta is commutative, so this succeeds even after main
         has moved (unlike fast_forward); replacing snapshots raise, as in
         Iceberg."""
-        lock, token = self._acquire_commit_lock()
-        try:
-            snaps = self._snaps()
-            by_id = {s["snapshot_id"]: s for s in snaps}
+        with self._locked():
+            by_id = {s["snapshot_id"]: s for s in self._snaps()}
             if snapshot_id not in by_id:
                 raise WarehouseError(f"snapshot {snapshot_id} not found")
             src = by_id[snapshot_id]
@@ -4360,31 +4075,18 @@ class Table:
                     "cherry-pick supports append snapshots only"
                 )
             delta = [d for d in src["manifest"] if d not in par_dirs]
-            mains = self._main_snaps(snaps)
-            live = (mains[-1]["manifest"] if mains else []) + delta
-            inherited = mains[-1].get("delete_dirs", []) if mains else []
-            inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
-            return self._append_snapshot(
-                snaps,
+            return self._commit(
                 "append",
-                live,
                 {"cherry-picked-from": snapshot_id, **src.get("summary", {})},
-                inherited,
-                eq_deletes=inherited_eq,
+                delta,
+                held=True,
             )
-        finally:
-            self._release_commit_lock(lock, token)
 
     def drop_ref(self, name: str) -> None:
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             if name not in meta.get("refs", {}):
                 raise WarehouseError(f"unknown ref {name!r}")
             del meta["refs"][name]
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def partitions(self) -> DataFrame:
         """SHOW PARTITIONS: distinct hive partition values across the
@@ -4608,22 +4310,12 @@ class Table:
             "statistics-path": path,
             "file-size-in-bytes": len(data),
         }
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             meta["partition_statistics_files"] = [
                 e
                 for e in meta.get("partition_statistics_files", [])
                 if e["snapshot-id"] != snap_id
             ] + [entry]
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-            write_iceberg_metadata,
-        )
-
-        write_iceberg_metadata(self)
         return {**entry, "partitions": len(rows)}
 
     def _bucket_spec_hash(self, meta: dict | None = None) -> bool:
@@ -4638,9 +4330,7 @@ class Table:
         """ALTER TABLE … SET TBLPROPERTIES — metadata-only; the Iceberg
         knobs this engine honors (write.delete.mode, write.update.mode,
         …) take effect on the next write."""
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             if "write.bucket-hash" in props:
                 new = str(props["write.bucket-hash"])
                 if new not in ("iceberg-murmur3", "spark-murmur3-seed42"):
@@ -4659,21 +4349,13 @@ class Table:
                         f"{cur or 'spark-murmur3-seed42'})"
                     )
             meta["properties"].update({str(k): str(v) for k, v in props.items()})
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def unset_properties(self, keys: list[str]) -> None:
         """ALTER TABLE … UNSET TBLPROPERTIES (IF EXISTS semantics: absent
         keys are ignored, matching Spark)."""
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             for k in keys:
                 meta["properties"].pop(k, None)
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
 
     def rollback_to(self, snapshot_id: int) -> int:
         """CALL system.rollback_to_snapshot: make an earlier snapshot's
@@ -4682,29 +4364,17 @@ class Table:
         is preserved and time travel to the in-between snapshots still
         works — the same observable behavior as Iceberg's ref move)."""
         target = self._resolve(version=snapshot_id)
-        lock, token = self._acquire_commit_lock()
-        try:
-            return self._append_snapshot(
-                self._snaps(),
-                "rollback",
-                target["manifest"],
-                {"rollback-to": snapshot_id},
-                target.get("delete_dirs", []),
-                eq_deletes=target.get("eq_deletes", []),
-            )
-        finally:
-            self._release_commit_lock(lock, token)
+        return self._commit("rollback", {"rollback-to": snapshot_id}, base=target)
 
     def truncate(self, branch: str | None = None) -> int:
         """TRUNCATE TABLE: one 'delete' snapshot with an empty manifest —
         no data rewritten, time travel to pre-truncate snapshots intact.
         ``branch`` stages the truncation on a WAP branch like every other
         row-level write (main readers keep the data until publish)."""
-        if branch:
-            parent = self._resolve(branch)["snapshot_id"]
-        else:
-            parent = self.current_snapshot_id()
-        return self._commit_replace("delete", [], {"truncate": True}, parent, branch=branch)
+        parent = self._head(branch)["snapshot_id"]
+        return self._commit(
+            "delete", {"truncate": True}, base={}, expected_parent=parent, branch=branch
+        )
 
     def remove_orphan_files(self, older_than_s: float = 3 * 24 * 3600) -> int:
         """CALL system.remove_orphan_files: delete data/delete dirs on
@@ -4718,8 +4388,7 @@ class Table:
         read). Same 3-day default as Iceberg's remove_orphan_files."""
         import time as _time
 
-        lock, token = self._acquire_commit_lock()
-        try:
+        with self._locked():
             referenced = set()
             for s in self._snaps():
                 referenced.update(s["manifest"])
@@ -4748,8 +4417,6 @@ class Table:
                     fsio.rmtree(os.path.join(self.path, d))
                     removed += 1
             return removed
-        finally:
-            self._release_commit_lock(lock, token)
 
     def describe(self) -> list[tuple[str, str]]:
         """DESCRIBE TABLE (reference D9)."""
@@ -4822,9 +4489,7 @@ class Table:
         # Iceberg planners read. The engine-private JSON above keeps
         # null counts and bounds the open blob type doesn't carry.
         stats_entry = self._write_theta_statistics(df, cols, fields)
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+        with self._alter_meta() as meta:
             meta["statistics"] = stats
             if stats_entry is not None:
                 meta["statistics_files"] = [
@@ -4832,17 +4497,6 @@ class Table:
                     for e in meta.get("statistics_files", [])
                     if e["snapshot-id"] != stats_entry["snapshot-id"]
                 ] + [stats_entry]
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
-        if stats_entry is not None:
-            # a statistics update is a metadata update: re-export so the
-            # open metadata document advertises the new stats file
-            from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-                write_iceberg_metadata,
-            )
-
-            write_iceberg_metadata(self)
         return stats
 
     # nominal sketch size (DataSketches default): ANALYZE ships at most
@@ -4918,7 +4572,6 @@ class Table:
         meta = self._meta()
         ids = meta.get("column_ids", {})
         names = self.schema().fieldNames()
-        seq = len(self._snaps())
         blobs: list[tuple[bytes, dict]] = []
         for i, c in enumerate(sketch_cols):
             payload = TH.sketch_from_hashes(by_col.get(i, []))
@@ -4929,7 +4582,7 @@ class Table:
                         "type": "apache-datasketches-theta-v1",
                         "fields": [int(ids.get(c, names.index(c) + 1))],
                         "snapshot-id": int(snap_id),
-                        "sequence-number": seq,
+                        "sequence-number": int(snap_id),
                         "properties": {
                             "ndv": str(int(round(TH.sketch_estimate(payload))))
                         },
@@ -5094,7 +4747,7 @@ class Table:
         p = self._write_data(
             cur, pre_clustered=bool(zorder or sort_by), lineage_cols=True
         )
-        return self._commit_replace("replace", [p], summary, parent)
+        return self._commit("replace", summary, [p], base={}, expected_parent=parent)
 
     def row_count(self) -> int | None:
         """Metadata-only COUNT(*): Σ data-file rows − Σ tombstone rows of
@@ -5126,8 +4779,8 @@ class Table:
         carry over into the new snapshot by name; the delete files are
         dropped. Readers stop paying the anti-join, which is the point of
         running this after deletes accumulate."""
-        parent = self.current_snapshot_id()
-        snap = self._resolve()
+        snap = self._head(None)
+        parent = snap["snapshot_id"]
         del_dirs = snap.get("delete_dirs", [])
         if snap.get("eq_deletes"):
             # equality deletes can hit rows in ANY dir whose sequence
@@ -5135,11 +4788,12 @@ class Table:
             # positional-only path below stays O(affected dirs))
             live = self.read(lineage=True)
             p = self._write_data(live, lineage_cols=True)
-            return self._commit_replace(
+            return self._commit(
                 "replace",
-                [p],
                 {"materialized-equality-deletes": len(snap["eq_deletes"])},
-                parent,
+                [p],
+                base={},
+                expected_parent=parent,
             )
         if not del_dirs:
             return parent or 0  # no tombstones — nothing to rewrite
@@ -5163,11 +4817,12 @@ class Table:
             rewritten, del_dirs, cols + ["_row_id", "_last_updated_sequence_number"]
         )
         p = self._write_data(live, lineage_cols=True)
-        return self._commit_replace(
+        return self._commit(
             "replace",
-            untouched + [p],
             {"rewrote-dirs": len(affected), "materialized-deletes": len(tomb_files)},
-            parent,
+            untouched + [p],
+            base={},
+            expected_parent=parent,
         )
 
     def expire_snapshots(self, keep_last: int = 1, older_than_ms: int | None = None) -> int:
@@ -5176,9 +4831,11 @@ class Table:
         ``older_than_ms`` is Iceberg's primary form: only snapshots
         committed BEFORE the cutoff expire, still retaining at least
         ``keep_last`` (and everything refs pin)."""
-        lock, token = self._acquire_commit_lock()
-        try:
+        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import _compile_eq_deletes
+
+        with self._locked():
             snaps = self._snaps()
+            meta = self._meta()
             # ref-pinned snapshots survive expiry — and for a BRANCH head
             # the whole staged parent chain down to (and including) its
             # main fork point must survive with it: fast_forward walks
@@ -5187,7 +4844,7 @@ class Table:
             # unpublishable
             by_id = {s["snapshot_id"]: s for s in snaps}
             pinned: set[int] = set()
-            for r in self._meta().get("refs", {}).values():
+            for r in meta.get("refs", {}).values():
                 s = by_id.get(int(r["snapshot_id"]))
                 while s is not None:
                     pinned.add(s["snapshot_id"])
@@ -5213,6 +4870,9 @@ class Table:
                 | {d for s in keep for d in s.get("delete_dirs", [])}
                 | {r["dir"] for s in keep for r in s.get("eq_deletes", [])}
             )
+            # swap the log BEFORE deleting: a crash in between leaves
+            # unreferenced dirs (orphans), never a log naming missing ones
+            _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": keep})
             removed = 0
             for s in snaps:
                 if s in keep:
@@ -5227,10 +4887,8 @@ class Table:
                         if fsio.isdir(p):
                             fsio.rmtree(p)
                             removed += 1
-            _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": keep})
             # prune commit-time sequence records for dirs that no longer
             # exist anywhere (keeps meta O(live dirs))
-            meta = self._meta()
             meta_dirty = False
             if meta.get("dir_seqs"):
                 meta["dir_seqs"] = {
@@ -5257,22 +4915,17 @@ class Table:
             if meta_dirty:
                 self._write_meta(meta)
             # re-export open metadata so vN+1 reflects the pruned history
-            from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-                _compile_eq_deletes,
-                write_iceberg_metadata,
-            )
-
-            write_iceberg_metadata(self)
+            self._export()
             # GC compiled equality→positional delete dirs (export
             # artifacts, fingerprint-addressed) that no retained snapshot
             # resolves to — the export just (re)compiled/reused every
             # live one, so the name recomputation below is a cached
             # lookup, never a Spark job
-            meta = self._meta()
+            seqs = self._dir_seqs(meta, keep)
             live_eqpos = {
                 d
                 for s in keep
-                if (d := _compile_eq_deletes(self, meta, s)) is not None
+                if (d := _compile_eq_deletes(self, meta, s, seqs)) is not None
             }
             for d in fsio.listdir(self.path):
                 if (
@@ -5283,8 +4936,6 @@ class Table:
                     fsio.rmtree(os.path.join(self.path, d))
                     removed += 1
             return removed
-        finally:
-            self._release_commit_lock(lock, token)
 
 
 def _ms_to_ts(ms: int):

@@ -467,3 +467,99 @@ def test_export_publishes_sort_order(spark, tmp_path):
         f["transform"] == "identity" and f["direction"] == "asc"
         for f in order["fields"]
     )
+
+
+def _hint(t) -> int:
+    with open(os.path.join(t.path, "metadata", "version-hint.text")) as f:
+        return int(f.read().strip())
+
+
+def _stage(t):
+    t.create_ref("audit", "branch")
+    return t.insert_values([(8, "staged")], branch="audit")
+
+
+# (setup, commit): setup runs first and may return state for the commit
+_ONE_COMMIT = {
+    "append": (None, lambda t, spark, _: t.insert_values([(5, "e")])),
+    "upsert": (
+        None,
+        lambda t, spark, _: t.upsert(spark.createDataFrame([(1, "A")], "id int, v string")),
+    ),
+    "delete_keys": (
+        None,
+        lambda t, spark, _: t.delete_keys(spark.createDataFrame([(1,)], "id int")),
+    ),
+    "merge": (
+        None,
+        lambda t, spark, _: t.merge_into(
+            spark.createDataFrame([(2, "B"), (6, "f")], "id int, v string"), "id"
+        ),
+    ),
+    "mor_delete": (None, lambda t, spark, _: t.delete_where("id = 1", mode="merge-on-read")),
+    "compact": (None, lambda t, spark, _: t.compact()),
+    "rollback": (None, lambda t, spark, _: t.rollback_to(1)),
+    "cherry_pick": (_stage, lambda t, spark, staged: t.cherry_pick(staged)),
+    "fast_forward": (_stage, lambda t, spark, _: t.fast_forward("audit")),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ONE_COMMIT))
+def test_one_export_per_commit(wh, spark, op):
+    """Every commit exports exactly once, after its refs moved:
+    version-hint.text advances by one per call, and the document it
+    names carries the commit as main's head."""
+    t = wh.create_table("db", f"once_{op}", "id int, v string")
+    t.set_identifier_fields("id")
+    t.insert_values([(1, "a"), (2, "b")])
+    t.insert_values([(3, "c")])
+    setup, commit = _ONE_COMMIT[op]
+    state = setup(t) if setup else None
+    before = _hint(t)
+    sid = commit(t, spark, state)
+    assert _hint(t) == before + 1
+    assert _load_current_metadata(t.path)["current-snapshot-id"] == sid == t.current_snapshot_id()
+
+
+def test_legacy_metadata_version_numbering_continues_from_hint(wh, spark):
+    """Tables whose _meta.json still carries the old metadata_version
+    counter keep numbering from version-hint.text, and no existing vN
+    document is ever rewritten — including one a crash left past the
+    hint."""
+    t = wh.create_table("db", "legacy", "id int")
+    t.insert_values([(1,)])
+    t.insert_values([(2,)])
+    meta = t._meta()
+    meta["metadata_version"] = _hint(t)
+    t._write_meta(meta)
+    mdir = os.path.join(t.path, "metadata")
+    docs = {f: open(os.path.join(mdir, f), "rb").read() for f in os.listdir(mdir)
+            if f.endswith(".metadata.json")}
+    # a document written before a crash stopped its hint from moving
+    orphan = os.path.join(mdir, f"v{_hint(t) + 1}.metadata.json")
+    with open(orphan, "w") as f:
+        f.write("{}")
+    t.insert_values([(3,)])
+    assert _hint(t) == 4
+    assert open(orphan).read() == "{}"
+    for f, body in docs.items():
+        assert open(os.path.join(mdir, f), "rb").read() == body
+    assert _load_current_metadata(t.path)["current-snapshot-id"] == 3
+
+
+def test_metadata_only_changes_are_exported(wh, spark):
+    """ADD / RENAME COLUMN are metadata-only, but they change the table:
+    the latest exported document shows them at once, without waiting for
+    a data commit (a REST loadTable serves that document)."""
+    t = wh.create_table("db", "evolve_exp", "id int, v string")
+    t.insert_values([(1, "a")])
+
+    def current_fields():
+        md = _load_current_metadata(t.path)
+        schema = next(s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"])
+        return [f["name"] for f in schema["fields"]]
+
+    t.add_column("note", "string")
+    assert current_fields() == ["id", "v", "note"]
+    t.rename_column("v", "value")
+    assert current_fields() == ["id", "value", "note"]

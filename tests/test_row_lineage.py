@@ -363,3 +363,33 @@ def test_time_travel_lineage_reflects_old_snapshot(wh):
     assert old[2][1] == v1  # at v1 the row had not been updated yet
     new = _ids(tab)
     assert new[2][0] == old[2][0]
+
+
+def test_foreign_reader_lineage_after_expire(wh, spark):
+    """Sequence numbers are snapshot ids on both sides: after history is
+    expired, a later append reads the same `_last_updated_sequence_number`
+    through the open metadata as through the engine, and the exported
+    last-sequence-number never decreases."""
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+        read_iceberg_table,
+        resolve_metadata_path,
+    )
+
+    def last_seq():
+        md = json.loads(fsio.read_text(resolve_metadata_path(tab.path)))
+        return md["last-sequence-number"]
+
+    tab = _make(wh)
+    seen = []
+    for i in range(4):
+        tab.insert_values([(i, "v")])
+        seen.append(last_seq())
+    tab.expire_snapshots(keep_last=1)
+    seen.append(last_seq())
+    tab.insert_values([(9, "late")])
+    seen.append(last_seq())
+    assert seen == sorted(seen) and seen[-1] == tab.current_snapshot_id()
+    native = _ids(tab)
+    foreign = read_iceberg_table(spark, tab.path, row_lineage=True).collect()
+    assert {r.id: (r._row_id, r._last_updated_sequence_number) for r in foreign} == native
+    assert native[9][1] == tab.current_snapshot_id()

@@ -283,3 +283,48 @@ def test_wap_id_sql_surface(spark, tmp_path):
         lake.sql("INSERT INTO polaris.db.w VALUES (4, 'd')")
     lake.sql("RESET spark.wap.branch")
     lake.sql("RESET spark.wap.id")
+
+
+def _exported_refs(t) -> dict:
+    import json
+    import os
+
+    mdir = os.path.join(t.path, "metadata")
+    with open(os.path.join(mdir, "version-hint.text")) as f:
+        hint = f.read().strip()
+    with open(os.path.join(mdir, f"v{hint}.metadata.json")) as f:
+        return json.load(f)["refs"]
+
+
+_BRANCH_WRITES = {
+    "append": lambda t, spark: t.insert_values([(3, "c")], branch="audit"),
+    "upsert": lambda t, spark: t.upsert(
+        spark.createDataFrame([(1, "A")], "id int, v string"), branch="audit"
+    ),
+    "delete_keys": lambda t, spark: t.delete_keys(
+        spark.createDataFrame([(2,)], "id int"), branch="audit"
+    ),
+    "mor_delete": lambda t, spark: t.delete_where("id = 2", mode="merge-on-read", branch="audit"),
+    "overwrite": lambda t, spark: t.overwrite(
+        spark.createDataFrame([(7, "x")], "id int, v string"), branch="audit"
+    ),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_BRANCH_WRITES))
+def test_branch_commit_exports_moved_ref(wh, spark, write):
+    """A branch commit moves its ref BEFORE the open metadata is
+    exported, so the exported document names the new branch head (a
+    foreign reader of `audit` sees the staged write)."""
+    t = wh.create_table("db", f"ref_{write}", "id int, v string")
+    t.set_identifier_fields("id")
+    t.insert_values([(1, "a"), (2, "b")])
+    t.create_ref("audit", "branch")
+    sid = _BRANCH_WRITES[write](t, spark)
+    refs = t._meta()["refs"]
+    assert int(refs["audit"]["snapshot_id"]) == sid
+    exported = _exported_refs(t)
+    assert {n: r["snapshot-id"] for n, r in exported.items() if n != "main"} == {
+        n: int(r["snapshot_id"]) for n, r in refs.items()
+    }
+    assert exported["main"]["snapshot-id"] == t.current_snapshot_id()

@@ -341,7 +341,7 @@ def test_read_modify_write_conflict_detected(wh, spark):
     # another writer lands before our commit
     t.insert_values([(3, "c")])
     with pytest.raises(CommitConflictError):
-        t._commit_replace("delete", [p], {"predicate": "id = 2"}, parent)
+        t._commit("delete", {"predicate": "id = 2"}, [p], base={}, expected_parent=parent)
     # the concurrent writer's row is intact; retrying the delete succeeds
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
     t.delete_where("id = 2")
@@ -401,7 +401,7 @@ def test_metadata_columns(wh, spark):
 
 def _process_appender(root, ns, name, writer_id, n_commits):
     """Runs in a separate PROCESS: drive the raw commit protocol (no Spark
-    needed — _commit_add is pure file IO) against the shared table dir."""
+    needed — _commit is pure file IO) against the shared table dir."""
     from types import SimpleNamespace
 
     from minio_iceberg_polaris_lakehouse_spark.warehouse import Table
@@ -409,7 +409,7 @@ def _process_appender(root, ns, name, writer_id, n_commits):
     wh = SimpleNamespace(spark=None, root=root)
     t = Table(wh, ns, name)
     for i in range(n_commits):
-        t._commit_add("append", [f"dir-w{writer_id}-{i}"], {"writer": writer_id, "i": i})
+        t._commit("append", {"writer": writer_id, "i": i}, [f"dir-w{writer_id}-{i}"])
 
 
 def test_cross_process_commit_protocol_no_lost_updates(wh):
@@ -640,3 +640,33 @@ def test_incremental_append_scan(wh, spark):
     # but consuming from AFTER the rewrite works again
     t.insert_values([(6,)])  # v6
     assert sorted(r.id for r in t.incremental_scan(5).collect()) == [6]
+
+
+def test_commit_metadata_write_order(wh, spark, monkeypatch):
+    """Crash ordering of one commit: _meta.json (dir specs, sequences) is
+    written before the snapshot log names the dir, refs move after the
+    log, and the open metadata is exported last. A main-branch commit
+    writes _meta.json once; a branch commit twice (specs, then ref)."""
+    import os
+
+    from minio_iceberg_polaris_lakehouse_spark import fsio
+
+    t = wh.create_table("db", "order", "id int")
+    t.insert_values([(1,)])
+    t.create_ref("audit", "branch")
+    writes = []
+    for name in ("write_bytes_atomic", "try_create_exclusive"):
+        orig = getattr(fsio, name)
+
+        def spy(path, *a, _orig=orig, **k):
+            base = os.path.basename(path)
+            if base in ("_meta.json", "_snapshots.json") or base.endswith(".metadata.json"):
+                writes.append("export" if base.endswith(".metadata.json") else base)
+            return _orig(path, *a, **k)
+
+        monkeypatch.setattr(fsio, name, spy)
+    t.insert_values([(2,)])
+    assert writes == ["_meta.json", "_snapshots.json", "export"]
+    writes.clear()
+    t.insert_values([(3,)], branch="audit")
+    assert writes == ["_meta.json", "_snapshots.json", "_meta.json", "export"]
